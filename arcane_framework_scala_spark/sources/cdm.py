@@ -96,13 +96,8 @@ class SynapseCdmSource:
             return None
         stream = fs.open(p)
         try:
-            data = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                data.append(b)
-            return data.decode("utf-8")
+            # one JVM call for the whole file: py4j hands byte[] back as bytes
+            return stream.readAllBytes().decode("utf-8")
         finally:
             stream.close()
 
@@ -140,13 +135,11 @@ class SynapseCdmSource:
         return {"version": folders[-1] if folders else ""}
 
     # -- batch assembly ----------------------------------------------------
-    def _entity_schema(self, folder: str) -> T.StructType:
+    def _entity_fields(self, folder: str) -> list[tuple[str, T.DataType]]:
         model = self._read_small_file(f"{folder}/model.json")
         if model is None:
             raise FileNotFoundError(f"{folder}/model.json missing")
-        fields = parse_cdm_model(model, self.entity)
-        # CSVs are read as strings; typed conversion happens in _typed()
-        return T.StructType([T.StructField(n, T.StringType(), True) for n, _ in fields])
+        return parse_cdm_model(model, self.entity)
 
     def _typed(self, df: DataFrame, fields: list[tuple[str, T.DataType]]) -> DataFrame:
         cols = []
@@ -185,9 +178,9 @@ class SynapseCdmSource:
         if not csvs:
             return None
         csvs.sort(key=_csv_sort_key, reverse=True)
-        schema = self._entity_schema(folder)
-        model = self._read_small_file(f"{folder}/model.json")
-        fields = parse_cdm_model(model, self.entity)
+        fields = self._entity_fields(folder)
+        # CSVs are read as strings; typed conversion happens in _typed()
+        schema = T.StructType([T.StructField(n, T.StringType(), True) for n, _ in fields])
         raw = (
             self.spark.read.schema(schema)
             .option("header", "false")

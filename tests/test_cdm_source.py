@@ -2,6 +2,7 @@
 multiline CSV, typed conversion, merge key, watermark-driven incremental."""
 
 import json
+import time
 
 import pytest
 
@@ -125,3 +126,44 @@ def test_cdm_to_merge_pipeline(spark, cdm_container, tmp_path):
     assert set(final) == {"a1"}  # a2 deleted by the versionnumber-4 tombstone
     assert final["a1"]["name"] == "renamed"
     assert final["a1"]["versionnumber"] == 3
+
+
+def test_large_non_ascii_model_json_read_once(spark, cdm_container):
+    """A ≥256 KiB model.json with non-ASCII attribute names reaches the
+    batch schema byte-exact, in one read per batch, and fast: the file is
+    fetched in one JVM call, not one call per byte."""
+    folder = "2025-09-01T00.00.00Z"
+    extra = [f"größe_{i}_名前_🙂" for i in range(8)]
+    model = json.loads(json.dumps(MODEL))
+    model["entities"][0]["attributes"] += [{"name": n, "dataType": "string"} for n in extra]
+    # a second entity pads the manifest past 256 KiB, as wide CDM models do
+    model["entities"].append({
+        "name": "padding",
+        "attributes": [{"name": f"spalte_ä_{i}_列", "dataType": "string"} for i in range(6000)],
+    })
+    text = json.dumps(model, ensure_ascii=False)
+    path = f"{cdm_container}/{folder}/model.json"
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text)
+    assert len(text.encode("utf-8")) >= 256 * 1024
+
+    class CountingSource(SynapseCdmSource):
+        reads: list[str] = []
+
+        def _read_small_file(self, rel):
+            self.reads.append(rel)
+            return super()._read_small_file(rel)
+
+    src = CountingSource(spark=spark, container_path=cdm_container, entity="account")
+    assert src._read_small_file(f"{folder}/model.json") == text
+    assert src.in_progress_folder() == "2025-09-01T02.00.00Z"  # changelog.info
+    src.reads.clear()
+    t0 = time.monotonic()
+    df = src.read_batch(folder)
+    took = time.monotonic() - t0
+    assert src.reads == [f"{folder}/model.json"]
+    assert df.columns == [a["name"] for a in model["entities"][0]["attributes"]] + [
+        "ARCANE_MERGE_KEY"
+    ]
+    assert took < 5.0, f"read_batch took {took:.1f} s"
+    assert df.count() == 2  # the narrower CSV rows still parse
